@@ -48,10 +48,29 @@ table (k ~ 4*sqrt(N)) never materializes a giant matrix.  The centroid
 collect is k x dim doubles — the identical payload the old plan shipped
 as a broadcast relation.
 
-Preconditions (asserted): no NULL vectors (the write paths never produce
-one — the error sentinel is an all-zero vector), no NaN distances (NaN
-ordering differs between NumPy argmin and Spark's min; finite inputs
-cannot produce NaN here).
+Edge-input contract.  Each kernel emits what its reference plan (kept in
+tests/test_argmin_kernel.py and pinned there) emits on the same input:
+
+* NULL vector: the row is kept and scores like the plan's NULL fold —
+  ``assign_l2_arrow`` gives the lowest cid with ``d`` NULL (a NULL
+  distance sorts first in ``min(struct)``); ``ivf_assign_arrow`` gives the
+  lowest list_id with ``cscore`` 0.0 (``coalesce(try_divide(NULL, ..),
+  0.0)`` ties every list); ``silhouette_scores_arrow`` gives owner = the
+  lowest cid with ``s`` NULL.
+* empty input: zero rows out.
+* empty centroid table: ``ivf_assign_arrow`` returns zero rows, as the
+  old crossJoin did; the k-means callers of the other two return before
+  calling them (no seeds -> empty result).
+* one centroid: ``silhouette_scores_arrow`` raises ValueError (the b-term
+  needs a second-nearest centroid; the reference plan fails too, on
+  ``ds[1]``).  The other kernels take any k >= 1.
+* ragged width (a non-NULL vector whose width differs from the
+  centroids'): raises ValueError.  The plan's ``zip_with`` padded the
+  short side with NULL and scored the pair NULL; the kernel refuses
+  instead.
+* NaN (a NaN or NULL element, or a cosine whose dot and norms overflow
+  to inf): raises ValueError.  NumPy's argmin and Spark's ``min(struct)``
+  order NaN differently, so the plan's answer is not replayed.
 """
 
 from __future__ import annotations
@@ -112,18 +131,22 @@ def _round6(x: np.ndarray) -> np.ndarray:
     return out + 0.0
 
 
-def _mat(col) -> np.ndarray:
-    """Fixed-width list Arrow column -> (n, width) ndarray (no copies of
-    the value buffer beyond what flatten needs; raises on NULL rows)."""
-    if col.null_count:
-        raise ValueError("argmin kernel: NULL vector in assignment input")
+def _mat(col, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """List Arrow column -> ((n, width) ndarray, NULL-row mask).  NULL rows
+    come back zero-filled; callers overwrite their outputs from the mask.
+    Raises on a non-NULL row whose width is not ``width``."""
+    null = col.is_null().to_numpy(zero_copy_only=False)
+    lens = col.value_lengths().fill_null(width).to_numpy(zero_copy_only=False)
+    if (lens != width).any():
+        raise ValueError(
+            f"argmin kernel: vector width differs from the centroid width {width}"
+        )
     vals = col.flatten().to_numpy(zero_copy_only=False)
-    n = len(col)
-    if n == 0:
-        return vals.reshape(0, vals.shape[0] if vals.shape[0] else 0)
-    if len(vals) % n:
-        raise ValueError("argmin kernel: ragged vector widths")
-    return vals.reshape(n, len(vals) // n)
+    if not null.any():
+        return vals.reshape(len(col), width), null
+    X = np.zeros((len(col), width), dtype=vals.dtype)
+    X[~null] = vals.reshape(int((~null).sum()), width)
+    return X, null
 
 
 def _fold_sqnorm(C: np.ndarray) -> np.ndarray:
@@ -190,9 +213,10 @@ def assign_l2_arrow(
     id_col: str,
     cid_type: T.DataType,
 ) -> DataFrame:
-    """Map-side replacement for cluster._assign's crossJoin + fold +
-    struct-min plan: (id, e) -> (id, e, cid, d) with d = rounded 6dp L2 to
-    the nearest of the literal centroids ``C`` (ties to lowest cid).
+    """Map-side replacement for the crossJoin + L2 fold + struct-min
+    assignment plan (``_assign`` in tests/test_argmin_kernel.py):
+    (id, e) -> (id, e, cid, d) with d = rounded 6dp L2 to the nearest of
+    the literal centroids ``C`` (ties to lowest cid).
 
     ``C`` rows are re-sorted by cid ascending here so first-hit argmin ==
     the struct-min tie rule.
@@ -213,7 +237,7 @@ def assign_l2_arrow(
 
         step = max(1, _TILE_ELEMS // max(1, len(C)))
         for b in batches:
-            X = _mat(b.column(1))
+            X, null = _mat(b.column(1), C.shape[1])
             ams, ds = [], []
             for s0 in range(0, len(X), step):
                 D = _l2_rounded(X[s0 : s0 + step], C)
@@ -223,12 +247,13 @@ def assign_l2_arrow(
                 ds.append(D[np.arange(len(D)), am])
             am = np.concatenate(ams) if ams else np.empty(0, dtype=np.int64)
             d = np.concatenate(ds) if ds else np.empty(0)
+            am[null] = 0  # NULL vector: lowest cid, NULL distance
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(0),
                     b.column(1),
                     pa.array(cids[am], type=pa_cid),
-                    pa.array(d, type=pa.float64()),
+                    pa.array(d, type=pa.float64(), mask=null),
                 ],
                 names=[id_col, "e", "cid", "d"],
             )
@@ -244,7 +269,8 @@ def ivf_assign_arrow(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Map-side replacement for search.ivf_assign's crossJoin + cosine
-    fold + struct-min plan.  ``cent_rows`` is the collected (list_id,
+    fold + struct-min plan (``_old_ivf_assign`` in
+    tests/test_argmin_kernel.py).  ``cent_rows`` is the collected (list_id,
     centroid) table; output = input columns + (list_id, cscore), one row
     per vector, no Exchange."""
     others = [c for c in vectors.columns if c != vec_id]
@@ -277,7 +303,9 @@ def ivf_assign_arrow(
 
         step = max(1, _TILE_ELEMS // max(1, len(C)))
         for b in batches:
-            Xd = _mat(b.column(vec_idx)).astype(np.float64, copy=False)
+            # a NULL vector is zero-filled, so it scores 0.0 against every
+            # list and the first-hit argmax lands on the lowest list_id
+            Xd = _mat(b.column(vec_idx), C.shape[1])[0].astype(np.float64, copy=False)
             ams, ss = [], []
             for s0 in range(0, len(Xd), step):
                 S = _cos_rounded(Xd[s0 : s0 + step], C, cn)
@@ -327,7 +355,7 @@ def silhouette_scores_arrow(
 
         step = max(1, _TILE_ELEMS // max(1, len(C)))
         for b in batches:
-            X = _mat(b.column(1))
+            X, null = _mat(b.column(1), C.shape[1])
             owns, ss = [], []
             for s0 in range(0, len(X), step):
                 D = _l2_rounded(X[s0 : s0 + step], C)
@@ -343,10 +371,16 @@ def silhouette_scores_arrow(
                     s = np.where(g == 0.0, 0.0, _round6((bb - a) / g))
                 owns.append(cids[o[:, 0]])
                 ss.append(s)
+            own = np.concatenate(owns) if owns else np.empty(0, np.int64)
+            own[null] = cids[0]  # NULL vector: lowest cid, NULL score
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(owns) if owns else np.empty(0, np.int64), type=pa.int64()),
-                    pa.array(np.concatenate(ss) if ss else np.empty(0), type=pa.float64()),
+                    pa.array(own, type=pa.int64()),
+                    pa.array(
+                        np.concatenate(ss) if ss else np.empty(0),
+                        type=pa.float64(),
+                        mask=null,
+                    ),
                 ],
                 names=["cid", "s"],
             )

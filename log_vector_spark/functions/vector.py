@@ -2,33 +2,25 @@
 
 The reference's only distance is cosine, fixed at collection creation
 (reference index.py:434) and consumed by top-k retrieval (reference
-ask.py:200-203).  Spark has no cosine builtin; two implementations live here:
-
-* **unrolled** (``dim`` known): an explicit 64-term (or whatever the width
-  is) ``element_at`` sum.  This stays inside whole-stage codegen — measured
-  ~30x faster than the HOF fold on a 110k-pair scoring stage, because
-  Spark's higher-order functions are CodegenFallback (interpreted, boxed)
-  while GetArrayItem + arithmetic compile to tight JVM bytecode and benefit
-  from subexpression elimination.  Embedding columns are fixed-width in
-  every real corpus, so this is the hot path.
-* **HOF fold** (``dim`` unknown): ``zip_with`` + ``aggregate``, correct for
-  ragged/unknown widths, used only when the caller can't know the width.
-
-Both produce BIT-IDENTICAL doubles: the unrolled sum associates left just
-like the fold, and ``0.0 + x == x`` exactly in IEEE754, so the oracle
-comparison (DuckDB ``list_dot_product``/``list_cosine_similarity`` with
-``::DOUBLE[]`` casts) holds for either.
+ask.py:200-203).  Spark has no cosine builtin, so every distance here is a
+higher-order-function fold (``zip_with`` + ``aggregate``): correct for any
+width, left-associated, and the one vector-math path the Column algebra
+uses.  Assignment-shaped operators (k-means, IVF, silhouette) score in the
+NumPy kernels of ``functions/argmin.py``, which replay this fold's IEEE
+operation sequence bit-exactly.
 
 Precision discipline (SURVEY §7.3): all arithmetic is promoted to DOUBLE
 before summing so results are bit-identical with the DuckDB oracle's
-left-to-right list folds; scores are rounded to 6 dp at the query boundary.
+left-to-right list folds (``list_dot_product``/``list_cosine_similarity``
+with ``::DOUBLE[]`` casts); scores are rounded to 6 dp at the query
+boundary.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -36,56 +28,8 @@ def _as_double(col: Column) -> Column:
     return col.cast("double")
 
 
-def _unrolled_sum(terms: list[Column]) -> Column:
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def _dim_checked(expr: Column, dim: int, *arrays: Column) -> Column:
-    """Fail fast when an array is narrower than the unrolled width.
-
-    In a non-ANSI session ``element_at`` past the end returns NULL, so a
-    wrong ``dim`` would silently NULL every score; this guard raises in ANY
-    session mode.  size() is O(1) on an array column, so the check is free
-    next to the O(dim) arithmetic it protects.
-    """
-    ok = None
-    null_any = None
-    for arr in arrays:
-        cond = F.size(arr) == dim
-        ok = cond if ok is None else (ok & cond)
-        n = arr.isNull()
-        null_any = n if null_any is None else (null_any | n)
-    # NULL array -> NULL result (same as the HOF fold), never an error
-    return (
-        F.when(null_any, F.lit(None).cast("double"))
-        .when(ok, expr)
-        .otherwise(F.raise_error(F.lit(f"vector width != dim={dim} on unrolled path")))
-    )
-
-
-def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
-    """sum_i a[i]*b[i] in double precision, left-associated.
-
-    With ``dim`` the sum is unrolled into a codegen'd expression; a size
-    guard raises on any row whose array width differs from ``dim`` (in both
-    ANSI and non-ANSI sessions).  Without it the HOF fold handles any width
-    interpretively.
-    """
-    if dim:
-        return _dim_checked(
-            _unrolled_sum(
-                [
-                    _as_double(F.element_at(a, i + 1)) * _as_double(F.element_at(b, i + 1))
-                    for i in range(dim)
-                ]
-            ),
-            dim,
-            a,
-            b,
-        )
+def dot_product(a: Column, b: Column) -> Column:
+    """sum_i a[i]*b[i] in double precision, left-associated."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: _as_double(x) * _as_double(y)),
         F.lit(0.0),
@@ -93,35 +37,16 @@ def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def squared_l2(a: Column, b: Column, dim: int | None = None) -> Column:
+def squared_l2(a: Column, b: Column) -> Column:
     """sum_i (a[i]-b[i])^2, accumulated in double — the k-means / PQ-encode
-    distance kernel.
+    distance.
 
-    Bit-compat contract with the HOF fold (which the DuckDB oracles
-    replay): each TERM is computed in the INPUT element type — for float32
-    arrays the zip_with lambda produces float32 squares — and only the
-    ACCUMULATION promotes to double (acc + v).  The unrolled path
-    therefore leaves the per-term arithmetic uncast and casts the finished
-    term to double before the left-associated sum: identical IEEE
-    operation sequence, so both paths produce the same doubles for float
-    AND double inputs.  (Pre-casting the operands would silently change
-    float-input results at the ulp level and break oracle hashes.)
-
-    WIDTH CAVEAT (measured): unlike dot_product, each unrolled term here
-    duplicates its subtraction subtree (d*d with no let-binding in the
-    Column algebra), so the expression is ~2.5x the dot tree.  At the PQ
-    subspace width (8) this wins ~20%% over the fold; at 64 the generated
-    method overflows whole-stage codegen limits and the interpreted
-    fallback runs 3x SLOWER than the fold (kmeans assignment measured
-    1.3 -> 3.8 s at sf0.1).  Pass dim only for narrow subvectors; leave
-    full-width k-means distances on the fold.
+    Bit-compat contract (the DuckDB oracles replay it): each TERM is
+    computed in the INPUT element type — for float32 arrays the zip_with
+    lambda produces float32 squares — and only the ACCUMULATION promotes
+    to double (acc + v).  Pre-casting the operands would change
+    float-input results at the ulp level and break oracle hashes.
     """
-    if dim:
-        def term(i: int) -> Column:
-            d = F.element_at(a, i + 1) - F.element_at(b, i + 1)
-            return (d * d).cast("double")
-
-        return _dim_checked(_unrolled_sum([term(i) for i in range(dim)]), dim, a, b)
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -129,26 +54,13 @@ def squared_l2(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def l2_distance(a: Column, b: Column, dim: int | None = None) -> Column:
+def l2_distance(a: Column, b: Column) -> Column:
     """Euclidean distance (left-to-right accumulation, matching DuckDB's
     list_distance order — see squared_l2 for the float/double contract)."""
-    return F.sqrt(squared_l2(a, b, dim))
+    return F.sqrt(squared_l2(a, b))
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    if dim:
-        return F.sqrt(
-            _dim_checked(
-                _unrolled_sum(
-                    [
-                        _as_double(F.element_at(a, i + 1)) * _as_double(F.element_at(a, i + 1))
-                        for i in range(dim)
-                    ]
-                ),
-                dim,
-                a,
-            )
-        )
+def l2_norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: _as_double(x) * _as_double(x)),
@@ -158,7 +70,7 @@ def l2_norm(a: Column, dim: int | None = None) -> Column:
     )
 
 
-def l2_normalize(a: Column, dim: int | None = None) -> Column:
+def l2_normalize(a: Column) -> Column:
     """Unit-length copy of the vector (array<double>).
 
     Pre-normalizing at write time turns cosine into a plain dot product
@@ -167,41 +79,21 @@ def l2_normalize(a: Column, dim: int | None = None) -> Column:
     zero vectors rather than NaN: try_divide yields NULL on /0 and the
     coalesce restores 0.0 per element — same values as the old
     when(norm==0) form for non-NULL inputs.  A NULL array normalizes to
-    NULL on both paths (the HOF zip_with propagates it; the unrolled path
-    guards explicitly); a NULL *element* becomes 0.0 — the write path never
-    produces one, so no per-element isNull pass is spent on it.
+    NULL (zip_with propagates it); a NULL *element* becomes 0.0 — the write
+    path never produces one, so no per-element isNull pass is spent on it.
 
-    With ``dim``, the output array is built from unrolled element
-    expressions; the repeated norm subtree is shared by codegen's
-    subexpression elimination.  The HOF form materializes the norm via a
-    zip against a single-element wrapper so the O(dim) fold runs ONCE per
-    row, not once per element (lambda-captured outer expressions re-evaluate
-    per element — the round-1 lesson in BASELINE.md).
+    The norm is materialized via a zip against a norm-filled array built
+    once per row, so the O(dim) fold runs ONCE per row, not once per
+    element (lambda-captured outer expressions re-evaluate per element —
+    the round-1 lesson in BASELINE.md).
     """
-    norm = l2_norm(a, dim)
-    if dim:
-        return F.when(
-            a.isNull(), F.lit(None).cast("array<double>")
-        ).otherwise(
-            F.array(
-                *[
-                    F.coalesce(F.try_divide(_as_double(F.element_at(a, i + 1)), norm), F.lit(0.0))
-                    for i in range(dim)
-                ]
-            )
-        )
-    # bind norm once: transform over the original array with the norm smuggled
-    # in via a 2-field struct argument is not expressible; instead evaluate
-    # the fold once per row by nesting: transform(a, x -> coalesce(try_divide(x, norm), 0))
-    # would re-fold per element, so divide inside a zip_with against a
-    # norm-filled array built once.
-    norm_arr = F.array_repeat(norm, F.size(a))
+    norm_arr = F.array_repeat(l2_norm(a), F.size(a))
     return F.zip_with(
         a, norm_arr, lambda x, n: F.coalesce(F.try_divide(_as_double(x), n), F.lit(0.0))
     )
 
 
-def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine_similarity(a: Column, b: Column) -> Column:
     """cosine(a, b) in double precision; 0.0 when either norm is 0.
 
     try_divide + coalesce instead of when(denom==0): the when form evaluates
@@ -218,24 +110,9 @@ def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
     the reference index.py:138) so per-element isNull scans are not worth
     their interpreted-HOF cost on every scoring pair.
     """
-    denom = l2_norm(a, dim) * l2_norm(b, dim)
-    sim = F.coalesce(F.try_divide(dot_product(a, b, dim), denom), F.lit(0.0))
+    denom = l2_norm(a) * l2_norm(b)
+    sim = F.coalesce(F.try_divide(dot_product(a, b), denom), F.lit(0.0))
     return F.when(a.isNull() | b.isNull(), F.lit(None).cast("double")).otherwise(sim)
-
-
-def infer_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Probe the fixed vector width from one row (None on an empty frame).
-
-    One limit-1 scan — a single row-group read even at 100 TB.  Pairs with
-    the ``dim=`` fast path above, which no operator enables by DEFAULT: the
-    unrolled expressions win ~30x inside broadcast-crossJoin/scan stages but
-    lose 2-3x inside shuffle-join stages and thrash the JIT code cache for
-    later queries (BASELINE.md lesson 7) — so the switch is a deliberate
-    per-callsite decision, not automatic.  Parity of the two paths is pinned
-    by tests/test_vector_fns.py.
-    """
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    return int(row["d"]) if row and row["d"] is not None and row["d"] > 0 else None
 
 
 def literal_vector(values: Sequence[float]) -> Column:

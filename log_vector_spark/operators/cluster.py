@@ -3,86 +3,105 @@
 Semantic clustering is the workhorse behind curriculum bucketing, cluster-
 balanced sampling, and topic-level dedup in pretraining pipelines (the
 reference engine has no clustering; this extends the brief's similarity
-surface).  The implementation (r12, guide §4.2/§2.4):
+surface).  ``lloyd`` is the package's one Lloyd round loop — kmeans_fit,
+cluster_silhouette and search.make_centroids_kmeans all run it:
 
   * the assignment is a map-side Arrow kernel
-    (functions/argmin.assign_l2_arrow): centroids are collected (k rows —
+    (functions/argmin.assign_l2_arrow): centroids are a literal (k rows —
     the same relation earlier rounds broadcast) and every batch's argmin
     runs vectorized in NumPy with the HOF fold's exact IEEE sequence — no
-    Exchange, no interpreted per-pair fold (the old
-    crossJoin(broadcast) + fold + min(struct) plan is kept in ``_assign``
-    as the executable spec the kernel is pinned against);
-  * each Lloyd round's k-row centroid table is collected back, so the
-    next round's kernel (and every downstream consumer) sees a literal —
-    the expensive multi-round lineage is paid once per query build, not
-    once per consumer action;
-  * the centroid update stays a distributed linear shuffle keyed
-    (cluster, dim) with map-side partial aggregation producing k*dim
+    Exchange, no interpreted per-pair fold;
+  * each round's k-row centroid table is collected back, so the next
+    round's kernel (and every downstream consumer) sees a literal — the
+    expensive multi-round lineage is paid once per query build, not once
+    per consumer action;
+  * the centroid update (``_update``) stays a distributed linear shuffle
+    keyed (cluster, dim) with map-side partial aggregation producing k*dim
     rows (decimal-exact means are cheap JVM codegen; nothing data-scaled
     ever reaches the driver — only k x dim doubles per round).
 
-Determinism contract (what makes this oracle-pairable against unrolled
-SQL): seeds are the k lowest-id vectors; distances are rounded to 6dp
-before the argmin; ties break on centroid id; updated centroid components
-are decimal-exact means rounded to 6dp.  Both engines therefore walk the
-identical rounded state through every iteration.
+Determinism contract (what makes this oracle-pairable against the
+iteration-unrolled DuckDB SQL): seeds are the k lowest-id vectors;
+distances are rounded to 6dp before the argmin; ties break on centroid
+id; updated centroid components are decimal-exact means rounded to 6dp.
+Both engines therefore walk the identical rounded state through every
+iteration.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-
-def _l2(a, b, dim: int | None = None) -> F.Column:
-    """Euclidean distance between two double-array columns (left-to-right
-    accumulation, matching DuckDB's list_distance order).  With ``dim`` the
-    sum unrolls into whole-stage codegen (BASELINE lesson 7: ~30x over the
-    interpreted HOF fold on broadcast-assignment stages) — bit-identical
-    doubles either way (functions.vector.squared_l2 contract)."""
-    from log_vector_spark.functions.vector import l2_distance
-
-    return l2_distance(a, b, dim)
+from log_vector_spark.functions.argmin import assign_l2_arrow, silhouette_scores_arrow
 
 
-def _assign(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, dim: int | None = None
-) -> DataFrame:
-    """Nearest centroid per vector: rounded distance, ties to lowest cid.
-
-    argmin as a groupBy struct-min, NOT a window: the k-way scored relation
-    is reduced map-side (partial min per partition), so the shuffle carries
-    one row per vector instead of k — at production k (thousands of lists)
-    a window would shuffle the k-times-larger scored relation wholesale.
-    The struct orders (d, cid, ...) so ties still break to the lowest cid;
-    cid is unique per scored row, so the trailing payload never compares.
-    """
-    j = vectors.crossJoin(
-        F.broadcast(centroids.select("cid", F.col("e").alias("ce")))
-    ).withColumn("d", F.round(_l2(F.col("e"), F.col("ce"), dim), 6))
-    best = j.groupBy(id_col).agg(
-        F.min(F.struct(F.col("d"), F.col("cid"), F.col("e"))).alias("m")
-    )
-    return best.select(
-        id_col, F.col("m.e").alias("e"), F.col("m.cid").alias("cid"), F.col("m.d").alias("d")
-    )
-
-
-def _update(assigned: DataFrame) -> DataFrame:
-    """Per-cluster element-wise mean, decimal-exact then rounded to 6dp."""
-    dims = assigned.select("cid", F.posexplode("e").alias("dim", "x"))
-    per = dims.groupBy("cid", "dim").agg(
+def _update(assigned: DataFrame, keys: list[str]) -> DataFrame:
+    """Per-group element-wise mean of ``e``, decimal-exact then rounded to
+    6dp: (*keys, e).  ``keys`` names the group — the cluster id for a
+    Lloyd round, (subspace, code_id) for the PQ codebook."""
+    dims = assigned.select(*keys, F.posexplode("e").alias("dim", "x"))
+    per = dims.groupBy(*keys, "dim").agg(
         F.round(
             F.sum(F.col("x").cast("decimal(28,20)")).cast("double") / F.count(F.lit(1)),
             6,
         ).alias("xm")
     )
-    return per.groupBy("cid").agg(
+    return per.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "xm"))),
             lambda s: s.getField("xm"),
         ).alias("e")
     )
+
+
+def lloyd(
+    v: DataFrame,
+    cids: list,
+    C: np.ndarray,
+    rounds: int,
+    id_col: str,
+    cid_type: T.DataType,
+) -> tuple[list, np.ndarray]:
+    """Run ``rounds`` Lloyd rounds over ``v`` (id, e double[]) from the
+    literal centroids (cids, C); return the refined (cids, C), sorted by
+    cid.  Empty clusters drop.
+
+    Each round = one map-side Arrow argmin over ``v`` + the distributed
+    decimal-exact update, whose k-row result is collected for the next
+    round.  The k x dim collect per round is the same payload a broadcast
+    build side carries; paying the rounds eagerly (instead of a fused lazy
+    lineage or a per-round localCheckpoint chain) means a consumer action
+    re-runs only ONE cheap kernel pass, never the whole Lloyd chain.
+    """
+    for _ in range(rounds):
+        rows = sorted(
+            _update(assign_l2_arrow(v, cids, C, id_col, cid_type), ["cid"]).collect(),
+            key=lambda r: r["cid"],
+        )
+        cids = [r["cid"] for r in rows]
+        C = np.asarray([r["e"] for r in rows], dtype=np.float64)
+    return cids, C
+
+
+def _fit(
+    vectors: DataFrame, k: int, iters: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, list, np.ndarray | None]:
+    """(v, cids, C): the double-cast (id, e) relation and the centroids its
+    FINAL assignment is scored against — the k lowest-id vectors (cid =
+    rank 0..k-1) refined by ``iters - 1`` Lloyd rounds.  C is None on an
+    empty corpus."""
+    v = vectors.select(
+        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("e")
+    )
+    # seeds: the k lowest-id vectors, collected (k rows)
+    seeds = v.orderBy(id_col).limit(k).collect()
+    if not seeds:
+        return v, [], None
+    C = np.asarray([r["e"] for r in seeds], dtype=np.float64)
+    cids, C = lloyd(v, list(range(len(seeds))), C, iters - 1, id_col, T.IntegerType())
+    return v, cids, C
 
 
 def kmeans_fit(
@@ -91,7 +110,6 @@ def kmeans_fit(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run `iters` Lloyd rounds; return (assignments, centroids) — the
     model form.  `assignments` carries (id, e, cid, d); `centroids` is the
@@ -102,49 +120,23 @@ def kmeans_fit(
 
     Seeds = the k lowest-id vectors (deterministic, oracle-reproducible;
     swap for k-means|| sampling in production where determinism across
-    engines is not required).  Pass ``dim`` when the vector width is known
-    so the assignment distances run unrolled in codegen (bit-identical).
+    engines is not required).
     """
-    import numpy as np
-
-    from log_vector_spark.functions.argmin import assign_l2_arrow
-
     spark = vectors.sparkSession
-    v = vectors.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("e")
-    )
+    v, cids, C = _fit(vectors, k, iters, id_col, vec_col)
     c_schema = T.StructType(
         [
             T.StructField("cid", T.IntegerType(), False),
             T.StructField("e", T.ArrayType(T.DoubleType()), True),
         ]
     )
-    # seeds: the k lowest-id vectors, collected (k rows) — cid = rank 0..k-1
-    seeds = v.orderBy(id_col).limit(k).collect()
-    if not seeds:
+    if C is None:
         empty_assigned = (
             v.where(F.lit(False))
             .withColumn("cid", F.lit(None).cast("int"))
             .withColumn("d", F.lit(None).cast("double"))
         )
         return empty_assigned, spark.createDataFrame([], c_schema)
-    cids = list(range(len(seeds)))
-    C = np.asarray([r["e"] for r in seeds], dtype=np.float64)
-    # r12 (guide §4.2/§2.4): each round = one map-side Arrow argmin over v
-    # + the distributed decimal-exact update, whose k-row result is
-    # collected for the next round.  The k x dim collect per round is the
-    # same payload the old plan's BroadcastExchange carried; paying the
-    # rounds eagerly here (instead of the old fused lazy lineage) means a
-    # consumer action re-runs only ONE cheap kernel pass, never the whole
-    # Lloyd chain.  (The r6 per-round localCheckpoint revert stands — this
-    # replaces checkpoints with literals, which nothing can re-fire.)
-    for _ in range(iters - 1):
-        rows = sorted(
-            _update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType())).collect(),
-            key=lambda r: r["cid"],
-        )
-        cids = [r["cid"] for r in rows]
-        C = np.asarray([r["e"] for r in rows], dtype=np.float64)
     assigned = assign_l2_arrow(v, cids, C, id_col, T.IntegerType())
     c = spark.createDataFrame(
         [(int(cid), [float(x) for x in e]) for cid, e in zip(cids, C)], c_schema
@@ -158,10 +150,9 @@ def kmeans_assignments(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """(id, cluster, dist) per vector — the assignment view of kmeans_fit."""
-    assigned, _ = kmeans_fit(vectors, k, iters, id_col, vec_col, dim)
+    assigned, _ = kmeans_fit(vectors, k, iters, id_col, vec_col)
     return assigned.select(
         id_col, F.col("cid").alias("cluster"), F.col("d").alias("dist")
     )
@@ -299,7 +290,6 @@ def cluster_silhouette(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Per-cluster simplified (centroid-based) silhouette — the standard
     clustering-quality report for a curation run that buckets a corpus
@@ -309,10 +299,10 @@ def cluster_silhouette(
     a non-starter at corpus scale); the centroid form (a(i) = distance to
     own centroid, b(i) = min distance to any OTHER centroid,
     s = (b-a)/max(a,b)) is the scalable estimator every production
-    clustering report uses — it reuses the k-row centroid relation the
-    assignment already broadcast, so the marginal cost over kmeans_fit is
-    one more scan-stage k-way distance fold and one linear vec-keyed
-    reduce.  No new shuffle keys, nothing data-scaled on the driver.
+    clustering report uses — it reuses kmeans_fit's k-row centroid
+    literal, so the marginal cost over kmeans_fit is one more map-side
+    k-way distance pass and one linear cluster-keyed reduce.  No new
+    shuffle keys, nothing data-scaled on the driver.
 
     Determinism contract (oracle-pairable): a is the assignment's rounded
     6dp distance; b rounds each other-centroid distance to 6dp before the
@@ -320,42 +310,24 @@ def cluster_silhouette(
     of the 6dp values divided once and rounded (the kmeans update idiom),
     so every reported number is fold-order-proof.  Degenerate vectors
     sitting exactly on two centroids (a = b = 0) score 0 by convention.
+    An empty corpus yields an empty report.
     """
-    # r12 (guide §4.2/§2.4): both silhouette terms are pure per-row
-    # reductions over the k centroid distances, so the whole scoring runs
-    # in ONE map-side Arrow kernel (functions/argmin.silhouette_scores_arrow):
-    # a = smallest rounded distance (ties to lowest cid — exactly the
-    # assignment's argmin), b = the second smallest (cids are distinct per
-    # vector, so the second entry IS the min over other clusters).  The
-    # old crossJoin(broadcast) + fold + groupBy(collect_list) form paid a
-    # k-way interpreted fold plus a per-vector hash-agg Exchange for what
-    # is row-local arithmetic; the kernel leaves the per-CLUSTER mean as
-    # the only shuffle in the plan.  Lloyd rounds share kmeans_fit's
-    # collect-per-round idiom (identical rounded state, literal
-    # centroids).
-    import numpy as np
-
-    from log_vector_spark.functions.argmin import (
-        assign_l2_arrow,
-        silhouette_scores_arrow,
-    )
-
-    v = vectors.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("e")
-    )
-    seeds = v.orderBy(id_col).limit(k).collect()
-    cids = list(range(len(seeds)))
-    C = np.asarray([r["e"] for r in seeds], dtype=np.float64)
-    for _ in range(iters - 1):
-        rows = sorted(
-            _update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType())).collect(),
-            key=lambda r: r["cid"],
+    # both silhouette terms are pure per-row reductions over the k
+    # centroid distances, so the scoring runs in ONE map-side Arrow kernel
+    # (functions/argmin.silhouette_scores_arrow): a = smallest rounded
+    # distance (ties to lowest cid — exactly the assignment's argmin),
+    # b = the second smallest (cids are distinct per vector, so the second
+    # entry IS the min over other clusters).  The per-CLUSTER mean is the
+    # only shuffle in the plan.
+    v, cids, C = _fit(vectors, k, iters, id_col, vec_col)
+    if C is None:
+        scores = v.where(F.lit(False)).select(
+            F.lit(None).cast("long").alias("cid"), F.lit(None).cast("double").alias("s")
         )
-        cids = [r["cid"] for r in rows]
-        C = np.asarray([r["e"] for r in rows], dtype=np.float64)
+    else:
+        scores = silhouette_scores_arrow(v, cids, C, id_col)
     return (
-        silhouette_scores_arrow(v, cids, C, id_col)
-        .groupBy(F.col("cid").cast("int").alias("cluster"))
+        scores.groupBy(F.col("cid").cast("int").alias("cluster"))
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
             F.round(

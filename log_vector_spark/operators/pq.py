@@ -21,9 +21,10 @@ Determinism contract (oracle-replayable):
   same corpus always yields the same codebook (a real deployment would run
   k-means per subspace; the stride pick keeps the identical plan shape —
   same tradeoff as search.make_centroids);
-* code assignment = argmin squared-L2 rounded at SCORE_DP, ties to the
-  lower code id (the ivf_assign min(struct) idiom: hash-agg, shuffle is
-  one row per (vector, subspace), never the k-scored candidates);
+* code assignment = argmin of the squared-L2 HOF fold rounded at
+  SCORE_DP, ties to the lower code id (a min(struct) hash-agg: the
+  shuffle is one row per (vector, subspace), never the k-scored
+  candidates);
 * ADC partial scores rounded at SCORE_DP and summed as DECIMAL(18,6) —
   float sums are partitioning-order-dependent, decimal sums are
   associative, so the identical score lands bit-exact at any parallelism
@@ -36,22 +37,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from log_vector_spark.functions.vector import dot_product, literal_vector
+from log_vector_spark.functions.vector import dot_product, literal_vector, squared_l2
+from log_vector_spark.operators.cluster import _update
 from log_vector_spark.operators.search import SCORE_DP, sqrt_stride
 
 PQ_M = 8  # subspaces
 PQ_K = 16  # codes per subspace (4-bit codes)
-
-
-def _sq_l2(a, b, dim: int | None = None):
-    # squared L2; with `dim` (the subspace width, always known here) the
-    # sum unrolls into whole-stage codegen — the encode argmin is the PQ
-    # hot loop (corpus x m x k scored rows), and the unrolled form is
-    # bit-identical to the HOF fold (functions.vector.squared_l2 contract:
-    # terms in the input element type, accumulation in double)
-    from log_vector_spark.functions.vector import squared_l2
-
-    return squared_l2(a, b, dim)
 
 
 def pq_codebook(
@@ -101,10 +92,13 @@ def pq_codebook_kmeans(
     Seeds are the SAME k stride-sampled vectors' subvectors pq_codebook
     picks, then `iters` deterministic Lloyd rounds independently in each
     of the m subspaces: rounded-6dp squared-L2 argmin with lowest-code
-    ties (the cluster.py struct-min idiom — the shuffle carries one row
-    per (vector, subspace), never the k candidates), decimal-exact per-dim
-    means rounded to 6dp.  All arithmetic is promoted to double up front
-    so the refined centers replay bit-exactly in an unrolled SQL oracle.
+    ties (a min(struct) hash-agg — the shuffle carries one row per
+    (vector, subspace), never the k candidates), then cluster._update's
+    decimal-exact per-dim means rounded to 6dp.  The assignment stays
+    squared-L2 in Spark rather than cluster.lloyd's L2 kernel because the
+    pkcb oracle replays squared distances.  All arithmetic is promoted to
+    double up front so the refined centers replay bit-exactly in an
+    iteration-unrolled SQL oracle.
 
     Scale: each round is one broadcast of the m*k codebook, one scan-stage
     distance projection, and one linear (subspace, code, dim)-keyed mean
@@ -140,34 +134,15 @@ def pq_codebook_kmeans(
     )
     for _ in range(iters):
         scored = parts.join(F.broadcast(cb), "subspace").withColumn(
-            "dist", F.round(_sq_l2(F.col("subvec"), F.col("center"), sub), SCORE_DP)
+            "dist", F.round(squared_l2(F.col("subvec"), F.col("center")), SCORE_DP)
         )
         best = scored.groupBy(vec_id, "subspace").agg(
             F.min(F.struct(F.col("dist"), F.col("code_id"), F.col("subvec"))).alias("_b")
         )
         asg = best.select(
-            "subspace",
-            F.col("_b.code_id").alias("code_id"),
-            F.col("_b.subvec").alias("subvec"),
+            "subspace", F.col("_b.code_id").alias("code_id"), F.col("_b.subvec").alias("e")
         )
-        dims = asg.select("subspace", "code_id", F.posexplode("subvec").alias("d", "x"))
-        cb = (
-            dims.groupBy("subspace", "code_id", "d")
-            .agg(
-                F.round(
-                    F.sum(F.col("x").cast("decimal(28,20)")).cast("double")
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("xm")
-            )
-            .groupBy("subspace", "code_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("d", "xm"))),
-                    lambda s: s.getField("xm"),
-                ).alias("center")
-            )
-        )
+        cb = _update(asg, ["subspace", "code_id"]).withColumnRenamed("e", "center")
     return cb
 
 
@@ -193,7 +168,7 @@ def pq_encode(
         F.slice(F.col(vec_col), F.col("subspace") * sub + 1, sub).alias("subvec"),
     )
     scored = parts.join(F.broadcast(codebook), "subspace").withColumn(
-        "dist", F.round(_sq_l2(F.col("subvec"), F.col("center"), sub), SCORE_DP)
+        "dist", F.round(squared_l2(F.col("subvec"), F.col("center")), SCORE_DP)
     )
     best = scored.groupBy(vec_id, "subspace").agg(
         F.min(F.struct(F.col("dist"), F.col("code_id"))).alias("_b")

@@ -284,12 +284,6 @@ def blocked_pairs(
     # normalize ONCE per vector (O(n) folds) so each pair needs a single
     # dot-product fold instead of dot + two norms (O(pairs) x 3 folds) —
     # the write-time normalization of SURVEY §4.3.1 applied inline.
-    # HOF (fold) forms here, NOT the unrolled expressions: measured at
-    # sf0.1, the unrolled dot/normalize are 2-3x SLOWER inside shuffle-join
-    # stages (the generated method exceeds HotSpot's JIT size limit and the
-    # whole join stage drops to the bytecode interpreter), while they are
-    # 30x FASTER in broadcast-crossJoin/scan stages.  See ivf_assign for
-    # the crossJoin side of that measurement.
     unit = vectors.select(
         F.col(block_col), F.col(id_col), l2_normalize(F.col(vec_col)).alias("_unit")
     )
@@ -420,7 +414,8 @@ def sqrt_stride(n: int, floor_: int = 16) -> int:
     measured sf1-replica pair (stride 37 -> 20.7 s, stride 141 -> 38.7 s,
     N = 20k) gives p/a ~ 13 — a pair unit is an interpreted HOF dot inside
     a shuffle join plus the shuffle of both 64-float arrays, an assignment
-    unit is one dot in a codegen'd broadcast stage (BASELINE.md lesson 7).
+    unit was one dot in a codegen'd broadcast stage when this was measured
+    (BASELINE.md lesson 7; it is a NumPy argmin-kernel step now).
     Hence s* ~ sqrt(N)/4, which also lands on the old fixed 37 at N = 20k
     — correct there by accident, quadratic beyond it.
     """
@@ -460,17 +455,17 @@ def make_centroids_kmeans(
     iters: int = 2,
     vec_id: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
     train_cap: int | None = None,
 ) -> DataFrame:
     """K-means-refined IVF centroids (opt-in upgrade over the stride pick).
 
     Seeds are the SAME stride-sampled vectors make_centroids picks (cid =
     seed vec_id, so ties and list ids stay comparable), then `iters`
-    deterministic Lloyd rounds of cluster.py's assign/update: rounded-6dp
-    L2 argmin with lowest-cid ties, decimal-exact per-dim means — the
-    kmeans_clusters idiom, so the refined centroid table is bit-replayable
-    by an unrolled SQL oracle.  Empty clusters drop (fewer, denser lists).
+    deterministic rounds of cluster.lloyd (the package's one Lloyd loop):
+    rounded-6dp L2 argmin with lowest-cid ties, decimal-exact per-dim
+    means — the kmeans_clusters idiom, so the refined centroid table is
+    bit-replayable by an iteration-unrolled SQL oracle.  Empty clusters
+    drop (fewer, denser lists).
 
     This is the offline re-train step a real IVF deployment runs when
     recall degrades (FAISS trains its coarse quantizer the same way); cost
@@ -495,8 +490,7 @@ def make_centroids_kmeans(
     import numpy as np
     from pyspark.sql import types as T
 
-    from log_vector_spark.functions.argmin import assign_l2_arrow
-    from log_vector_spark.operators.cluster import _update
+    from log_vector_spark.operators.cluster import lloyd
 
     if every is None or train_cap is not None:
         from log_vector_spark.catalog import cached_count
@@ -524,19 +518,10 @@ def make_centroids_kmeans(
     if train_cap is not None and n > train_cap:
         tstride = -(-n // train_cap)  # ceil: sample size <= train_cap
         train = v.filter(F.col(vec_id) % tstride == 0).localCheckpoint(eager=True)
-    # r12 (guide §4.2): each Lloyd round = one map-side Arrow argmin over
-    # the (bounded) training set + the distributed decimal-exact update,
-    # collected back (k x dim doubles — the payload each old round
-    # BROADCAST anyway).  The literal centroids replace the per-round
-    # localCheckpoint chain outright: nothing downstream can re-fire the
-    # rounds, and the returned quantizer is a LocalTableScan.
-    for _ in range(iters):
-        rows = sorted(
-            _update(assign_l2_arrow(train, cids, C, vec_id, cid_type)).collect(),
-            key=lambda r: r["cid"],
-        )
-        cids = [r["cid"] for r in rows]
-        C = np.asarray([r["e"] for r in rows], dtype=np.float64)
+    # the Lloyd rounds run over the (bounded) training set and hand back
+    # literal centroids: nothing downstream can re-fire the rounds, and
+    # the returned quantizer is a LocalTableScan
+    cids, C = lloyd(train, cids, C, iters, vec_id, cid_type)
     return spark.createDataFrame(
         [(cid, [float(x) for x in e]) for cid, e in zip(cids, C)], out_schema
     )

@@ -791,13 +791,6 @@ def cluster_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_vector_spark.operators.cluster import cluster_silhouette as _sil
 
-    # dim deliberately NOT passed (r12): squared_l2's own width caveat —
-    # a 64-term unrolled L2 tree overflows whole-stage codegen (the d*d
-    # subtree doubles the expression), drops the stage to the interpreter,
-    # and its giant generated classes thrash the JIT code cache for every
-    # later query in the session.  Measured same-session A/B at sf0.1:
-    # unrolled 23->31 s/rep (degrading), fold 3-5 s/rep (stable), results
-    # bit-identical (collect-compared + oracle hash).  BASELINE lesson 7.
     return _sil(table(spark, "embeddings", sf_dir), k=8, iters=2)
 
 
@@ -3120,7 +3113,7 @@ def embedding_alignment_uniformity(spark: SparkSession, sf_dir: str) -> DataFram
         F.lead("vec_id").over(wl).alias("nid"),
         F.lead("e").over(wl).alias("ne"),
     ).filter(F.col("nid").isNotNull())
-    d1 = F.round(l2_distance(F.col("e"), F.col("ne"), 64), 6)
+    d1 = F.round(l2_distance(F.col("e"), F.col("ne")), 6)
     posd = pos.select(F.round(d1 * d1, 6).alias("sq"))
     al = posd.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pos_pairs"),
@@ -3138,7 +3131,7 @@ def embedding_alignment_uniformity(spark: SparkSession, sf_dir: str) -> DataFram
         .filter(F.col("partner") != F.col("vec_id"))
     )
     b = v.select(F.col("vec_id").alias("partner"), F.col("e").alias("be"))
-    d2 = F.round(l2_distance(F.col("e"), F.col("be"), 64), 6)
+    d2 = F.round(l2_distance(F.col("e"), F.col("be")), 6)
     ud = a.join(b, "partner").select(
         F.round(F.exp(-2.0 * F.round(d2 * d2, 6)), 6).alias("g")
     )

@@ -2,8 +2,8 @@
 
 Each kernel replaces a crossJoin(broadcast) + HOF fold + struct-min plan
 with a map-side Arrow pass.  These tests pin the kernels against the OLD
-plan forms (kept as ``cluster._assign`` or reconstructed here verbatim)
-on adversarial inputs: rounding-boundary distances, exact ties, zero
+plan forms (kept here verbatim as executable specs) on adversarial
+inputs: rounding-boundary distances, exact ties, zero vectors, NULL
 vectors, negative components, and pass-through payload columns.  Any
 drift here is an oracle-hash break, so the comparisons are exact
 (collect-equal), not approximate.
@@ -21,7 +21,7 @@ from log_vector_spark.functions.argmin import (
     ivf_assign_arrow,
     silhouette_scores_arrow,
 )
-from log_vector_spark.operators.cluster import _assign
+from log_vector_spark.functions.vector import l2_distance
 
 
 def _rng():
@@ -84,13 +84,34 @@ def test_round6_matches_spark_round_on_adversarial_values(spark):
 
 
 # ---------------------------------------------------------------------------
-# assign_l2_arrow vs the crossJoin + fold + struct-min spec (cluster._assign)
+# assign_l2_arrow vs the crossJoin + fold + struct-min spec (_assign)
 # ---------------------------------------------------------------------------
 
 
 def _vdf(spark, vecs):
     return spark.createDataFrame(
-        [Row(vec_id=i, e=[float(x) for x in v]) for i, v in enumerate(vecs)]
+        [(i, None if v is None else [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, e array<double>",
+    )
+
+
+def _sorted(df):
+    # repr key: rows may hold NULLs, which plain tuple ordering cannot compare
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _assign(vectors, centroids, id_col):
+    """The pre-kernel k-means assignment plan, verbatim (cluster.py before
+    the Arrow kernel): nearest centroid per vector as a groupBy struct-min,
+    rounded distance, ties to the lowest cid."""
+    j = vectors.crossJoin(
+        F.broadcast(centroids.select("cid", F.col("e").alias("ce")))
+    ).withColumn("d", F.round(l2_distance(F.col("e"), F.col("ce")), 6))
+    best = j.groupBy(id_col).agg(
+        F.min(F.struct(F.col("d"), F.col("cid"), F.col("e"))).alias("m")
+    )
+    return best.select(
+        id_col, F.col("m.e").alias("e"), F.col("m.cid").alias("cid"), F.col("m.d").alias("d")
     )
 
 
@@ -99,6 +120,7 @@ def test_assign_l2_arrow_matches_crossjoin_spec(spark):
     vecs = rng.normal(0.0, 1.0, (60, 5)).tolist()
     # exact-tie rows: equidistant to centroids 0/1 -> must pick cid 0
     vecs += [[0.0, 0.0, 0.0, 0.0, 0.0], [0.5, 0.0, 0.0, 0.0, 0.0]]
+    vecs += [None]  # NULL vector -> lowest cid, NULL distance
     cents = rng.normal(0.0, 1.0, (7, 5))
     cents[0] = [1.0, 0.0, 0.0, 0.0, 0.0]
     cents[1] = [-1.0, 0.0, 0.0, 0.0, 0.0]
@@ -106,18 +128,25 @@ def test_assign_l2_arrow_matches_crossjoin_spec(spark):
     cdf = spark.createDataFrame(
         [Row(cid=i, e=[float(x) for x in c]) for i, c in enumerate(cents)]
     )
-    want = sorted(map(tuple, _assign(v, cdf, "vec_id").collect()))
+    want = _sorted(_assign(v, cdf, "vec_id"))
     # shuffled cid order: the kernel must re-sort for the tie rule
     perm = list(range(7))[::-1]
-    got = sorted(
-        map(
-            tuple,
-            assign_l2_arrow(
-                v, [perm[i] for i in range(7)], cents[perm], "vec_id", T.IntegerType()
-            ).collect(),
+    got = _sorted(
+        assign_l2_arrow(
+            v, [perm[i] for i in range(7)], cents[perm], "vec_id", T.IntegerType()
         )
     )
     assert got == want
+    assert [r for r in got if r[0] == 62] == [(62, None, 0, None)]
+
+
+def test_assign_l2_arrow_refuses_ragged_width(spark):
+    # a 3-wide vector against 2-wide centroids: the reference plan's
+    # zip_with would pad with NULL and score NULL; the kernel raises
+    v = _vdf(spark, [[1.0, 0.0], [1.0, 0.0, 0.0]])
+    C = np.asarray([[0.0, 0.0], [5.0, 0.0]])
+    with pytest.raises(Exception, match="vector width differs"):
+        assign_l2_arrow(v, [0, 1], C, "vec_id", T.IntegerType()).collect()
 
 
 def test_assign_l2_arrow_plan_is_zero_shuffle(spark):
@@ -181,16 +210,19 @@ def test_ivf_assign_arrow_matches_old_plan(spark):
     rows.append(Row(vec_id=50, embedding=[0.0, 0.0, 0.0, 0.0], payload="z"))
     # exact cosine tie: colinear centroids at different magnitudes
     rows.append(Row(vec_id=51, embedding=[1.0, 0.0, 0.0, 0.0], payload="t"))
-    vectors = spark.createDataFrame(rows)
+    # NULL vector -> lowest list_id, cscore 0.0
+    rows.append(Row(vec_id=52, embedding=None, payload="n"))
+    vectors = spark.createDataFrame(rows, "vec_id long, embedding array<double>, payload string")
     cents = rng.normal(0.0, 1.0, (6, 4))
     cents[2] = [2.0, 0.0, 0.0, 0.0]
     cents[4] = [3.0, 0.0, 0.0, 0.0]
     centroids = spark.createDataFrame(
         [Row(list_id=i, centroid=[float(x) for x in c]) for i, c in enumerate(cents)]
     )
-    want = sorted(map(tuple, _old_ivf_assign(vectors, centroids).collect()))
-    got = sorted(map(tuple, ivf_assign(vectors, centroids).collect()))
+    want = _sorted(_old_ivf_assign(vectors, centroids))
+    got = _sorted(ivf_assign(vectors, centroids))
     assert got == want
+    assert [r for r in got if r[0] == 52] == [(52, None, "n", 0, 0.0)]
     # the registered entry point itself must carry no Exchange / join
     plan = (
         ivf_assign(vectors, centroids)._jdf.queryExecution().executedPlan().toString()
@@ -236,6 +268,7 @@ def test_silhouette_scores_arrow_matches_old_plan(spark):
     rng = _rng()
     vecs = rng.normal(0.0, 1.0, (40, 3)).tolist()
     vecs += [[0.0, 0.0, 0.0]]  # sits ON centroid 0 -> a == 0, b > 0
+    vecs += [None]  # NULL vector -> owner = lowest cid, NULL score
     cents = np.asarray(
         [[0.0, 0.0, 0.0], [1.0, 1.0, 1.0], [-1.0, 0.5, 0.0]], dtype=np.float64
     )
@@ -243,11 +276,10 @@ def test_silhouette_scores_arrow_matches_old_plan(spark):
     cdf = spark.createDataFrame(
         [Row(cid=i, e=[float(x) for x in c]) for i, c in enumerate(cents)]
     )
-    want = sorted(map(tuple, _old_silhouette_scores(v, cdf).collect()))
-    got = sorted(
-        map(tuple, silhouette_scores_arrow(v, [0, 1, 2], cents, "vec_id").collect())
-    )
+    want = _sorted(_old_silhouette_scores(v, cdf))
+    got = _sorted(silhouette_scores_arrow(v, [0, 1, 2], cents, "vec_id"))
     assert got == want
+    assert (0, None) in got
 
 
 def test_silhouette_degenerate_both_zero_scores_zero(spark):

@@ -46,7 +46,8 @@ def test_kmeans_assignment_is_zero_shuffle_map_kernel(spark):
     # centroids (functions/argmin).  The registered plan must carry NO
     # Exchange, NO join, NO Window — one MapInArrow node over the scan is
     # the whole assignment (the old crossJoin(broadcast)+struct-min shape
-    # lives on only as cluster._assign, the kernel's executable spec).
+    # lives on only as _assign in tests/test_argmin_kernel.py, the
+    # kernel's executable spec).
     df = _vecs(spark, [[float(i), 0.0] for i in range(20)])
     plan = (
         kmeans_assignments(df, k=2, iters=2)

@@ -83,8 +83,8 @@ def test_query_survives_degenerate_documents(spark, degenerate_sf, name):
 DEGENERATE_VECS = (
     # zero vectors (the reference's error sentinel, index.py:138), exact
     # duplicates (tie-break stress), a NULL embedding, near-zero floats —
-    # all 64-wide (width is a schema contract; wrong width raising is the
-    # INTENDED _dim_checked behavior, not a robustness gap)
+    # all 64-wide (width is a schema contract; a wrong width raising is the
+    # argmin kernels' INTENDED behavior, not a robustness gap)
     [(i, [0.0] * 64, i % 4) for i in range(6)]
     + [(i, [1.0] + [0.0] * 63, i % 4) for i in range(6, 12)]
     + [(i, [1e-30] * 64, i % 4) for i in range(12, 18)]

@@ -523,10 +523,9 @@ def test_no_unreviewed_collect_sites_in_engine_source():
         # payload the pre-r12 plans materialized on the driver as a
         # BroadcastExchange build side; never a corpus-scaled relation.
         ("operators/cluster.py", "seeds = v.orderBy(id_col).limit(k).collect()"),
-        ("operators/cluster.py", "_update(assign_l2_arrow(v, cids, C, id_col, T.IntegerType())).collect(),"),
+        ("operators/cluster.py", '_update(assign_l2_arrow(v, cids, C, id_col, cid_type), ["cid"]).collect(),'),
         ("operators/search.py", '(r[0], r[1]) for r in centroids.select("list_id", "centroid").collect()'),
         ("operators/search.py", "seeds = v.filter(F.col(vec_id) % every == 0).collect()"),
-        ("operators/search.py", "_update(assign_l2_arrow(train, cids, C, vec_id, cid_type)).collect(),"),
         ("sources/store.py", "rows = spark.read.json(os.path.join(path, \"manifest\")).collect()"),
         ("sources/store.py", "touched = [r[0] for r in docs.select(source_col).distinct().collect()]"),
         ("sources/store.py", "touched = [r[0] for r in touched_df.collect()]"),

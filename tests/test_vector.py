@@ -56,69 +56,9 @@ def test_zero_vector_cosine_is_zero(spark):
 
 
 @pytest.mark.spark
-def test_unrolled_dim_path_parity_with_hof(spark):
-    """The dim= unrolled expressions and the HOF folds are the two documented
-    implementations (functions/vector.py module docstring) — they must agree
-    bit-for-bit so an operator can switch paths per-callsite freely."""
-    from pyspark.sql import functions as F
-
-    from log_vector_spark.functions.vector import (
-        cosine_similarity,
-        dot_product,
-        l2_norm,
-        l2_normalize,
-        literal_vector,
-    )
-
-    rng = np.random.RandomState(3)
-    a = rng.rand(16).tolist()
-    b = rng.rand(16).tolist()
-    la, lb = literal_vector(a), literal_vector(b)
-    r = spark.range(1).select(
-        dot_product(la, lb).alias("dot_hof"),
-        dot_product(la, lb, dim=16).alias("dot_unrolled"),
-        l2_norm(la).alias("norm_hof"),
-        l2_norm(la, dim=16).alias("norm_unrolled"),
-        cosine_similarity(la, lb).alias("cos_hof"),
-        cosine_similarity(la, lb, dim=16).alias("cos_unrolled"),
-        l2_normalize(la).alias("unit_hof"),
-        l2_normalize(la, dim=16).alias("unit_unrolled"),
-    ).collect()[0]
-    # bit-identical: the unrolled sum associates left exactly like the fold
-    assert r.dot_hof == r.dot_unrolled
-    assert r.norm_hof == r.norm_unrolled
-    assert r.cos_hof == r.cos_unrolled
-    assert r.unit_hof == r.unit_unrolled
-
-
-@pytest.mark.spark
-def test_infer_dim_probes_width(spark):
-    from pyspark.sql import functions as F
-
-    from log_vector_spark.functions.vector import infer_dim
-
-    df = spark.range(3).select(F.array(F.lit(1.0), F.lit(2.0), F.lit(3.0)).alias("v"))
-    assert infer_dim(df, "v") == 3
-    assert infer_dim(df.filter("id < 0"), "v") is None
-
-
-@pytest.mark.spark
-def test_unrolled_wrong_dim_raises_not_nulls(spark):
-    """In a non-ANSI session element_at past the end returns NULL; the size
-    guard must turn a wrong dim into an error, never a silent NULL score."""
-    from log_vector_spark.functions.vector import dot_product, literal_vector
-
-    df = spark.range(1).select(
-        dot_product(literal_vector([1.0, 2.0]), literal_vector([3.0, 4.0]), dim=4).alias("d")
-    )
-    with pytest.raises(Exception, match="vector width != dim"):
-        df.collect()
-
-
-@pytest.mark.spark
 def test_null_array_scores_null_not_zero(spark):
     """A NULL embedding must propagate NULL (distinguishable from a true
-    zero-similarity pair), on both the HOF and unrolled paths."""
+    zero-similarity pair)."""
     from pyspark.sql import functions as F
 
     from log_vector_spark.functions.vector import (
@@ -131,13 +71,11 @@ def test_null_array_scores_null_not_zero(spark):
     ok = literal_vector([1.0, 2.0])
     r = spark.range(1).select(
         cosine_similarity(null_vec, ok).alias("c_hof"),
-        cosine_similarity(null_vec, ok, dim=2).alias("c_unrolled"),
         cosine_similarity(ok, null_vec).alias("c_rhs"),
         l2_normalize(null_vec).alias("n_hof"),
-        l2_normalize(null_vec, dim=2).alias("n_unrolled"),
     ).collect()[0]
-    assert r.c_hof is None and r.c_unrolled is None and r.c_rhs is None
-    assert r.n_hof is None and r.n_unrolled is None
+    assert r.c_hof is None and r.c_rhs is None
+    assert r.n_hof is None
 
 
 @pytest.mark.spark
