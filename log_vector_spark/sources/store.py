@@ -20,12 +20,16 @@ Layout decisions for 100 TB:
 
 from __future__ import annotations
 
+import logging
 import os
+import time
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from log_vector_spark.functions.vector import l2_norm, l2_normalize
+
+_log = logging.getLogger(__name__)
 
 CHUNKS_SCHEMA_COLS = ("chunk_id", "source", "chunk_index", "total_chunks", "document", "embedding")
 
@@ -42,21 +46,29 @@ def write_chunks(
     path: str,
     mode: str = "overwrite",
     partition_col: str | None = "source",
-) -> None:
-    """K1: persist the chunk table.  `overwrite` reproduces the reference's
-    delete-and-recreate (index.py:426-434); `append` implements the README's
-    documented incremental semantics."""
+) -> int:
+    """K1: persist the chunk table and return the number of rows written,
+    counted by the write itself (``DataFrame.observe``).  `overwrite`
+    reproduces the reference's delete-and-recreate (index.py:426-434);
+    `append` implements the README's documented incremental semantics."""
     if mode not in ("overwrite", "append"):
         raise ValueError("mode must be 'overwrite' or 'append'")
-    if partition_col and partition_col in chunks.columns:
+    partitioned = bool(partition_col) and partition_col in chunks.columns
+    if partitioned:
         # shuffle by the partition column so each source dir gets one
         # file per write, not one per upstream task; the exchange sits
         # ABOVE the chunk/embed projections, so their parallelism is kept
         chunks = chunks.repartition(F.col(partition_col))
-    writer = chunks.write.mode(mode)
-    if partition_col and partition_col in chunks.columns:
+    # observed directly above the last exchange: when that shuffle stage
+    # comes out empty, AQE swaps everything above it for an empty relation,
+    # which would drop a metrics node placed below (and every metrics node
+    # under it) and leave the observation without a row
+    written = Observation()
+    writer = chunks.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+    if partitioned:
         writer = writer.partitionBy(partition_col)
     writer.parquet(os.path.join(path, "chunks"))
+    return written.get["rows"]
 
 
 def upsert_chunks(
@@ -350,6 +362,12 @@ def read_chunks_snapshot(spark: SparkSession, path: str, version: int | None = N
 # files physically untouched (VERDICT r6 item 7).
 
 INCR_FP_COL = "doc_fp"
+# fingerprint-diff state labels: a stale (new, edited or moved) document, a
+# stored document absent from the batch, and the stored (old) source of a
+# stale id
+_STATE = "_state"
+_STALE, _DELETED, _MOVED_FROM = "stale", "deleted", "moved_from"
+_FRESH = "_fresh"
 
 
 def index_incremental(
@@ -369,93 +387,107 @@ def index_incremental(
     new doc, edited text, or a source move (same text, new source: the
     source is part of the identity, so a move re-indexes and the old
     partition drops the moved doc); a stored document absent from
-    ``docs`` is DELETED.  Only stale
-    documents flow through the chunk + embed UDFs; surviving rows of
-    touched partitions are carried over by COPY (no recompute), and
-    partitions with no stale/deleted documents are not rewritten at all
-    (dynamic partition overwrite), so their parquet files stay
+    ``docs`` is DELETED.  ``id_col`` is the document key (one row per id).
+    Only stale documents flow through the chunk + embed UDFs; surviving
+    rows of touched partitions are carried over by COPY (no recompute),
+    and partitions with no stale/deleted documents are not rewritten at
+    all (dynamic partition overwrite), so their parquet files stay
     byte-identical on disk.
 
-    Scale posture: the fingerprint diff reads ONLY (id, fp, source) from
-    the store (column pruning); the carry-over read is bounded to touched
-    partitions (partition pruning on ``source_col``); the expensive embed
-    UDF runs on exactly the stale documents.  The carried rows are
-    eagerly materialized (localCheckpoint) to break the read-then-
-    overwrite cycle on the same path — bounded by the touched partitions'
-    size, the same cost class as any compaction of those partitions.
+    Scale posture: the store is listed once.  The fingerprint diff reads
+    ONLY (id, fp, source) from it (column pruning) and is checkpointed as
+    one small (id, source, state) relation; a single bounded
+    (source x state) count of it yields the touched partitions and the
+    stale/deleted counts.  The carry-over read is bounded to touched
+    partitions (partition pruning on ``source_col``) and eagerly
+    materialized (localCheckpoint) to break the read-then-overwrite cycle
+    on the same path — bounded by the touched partitions' size, the same
+    cost class as any compaction of those partitions.  The expensive embed
+    UDF runs on exactly the stale documents, once: the fresh/carried row
+    counts and the written partitions are observed during the write
+    (``DataFrame.observe``), not re-read afterwards.
 
     Returns a summary dict: n_stale_docs, n_deleted_docs, n_fresh_chunks,
-    n_carried_chunks, touched_sources.
+    n_carried_chunks, touched_sources.  Each call logs it at INFO, with
+    the wall seconds, on this module's logger.
     """
     from pyspark.errors import AnalysisException
 
     from log_vector_spark.operators.chunk import chunk_documents
+
+    started = time.perf_counter()
+
+    def done(n_stale=0, n_deleted=0, n_fresh=0, n_carried=0, touched=()):
+        stats = {
+            "n_stale_docs": n_stale,
+            "n_deleted_docs": n_deleted,
+            "n_fresh_chunks": n_fresh,
+            "n_carried_chunks": n_carried,
+            "touched_sources": list(touched),
+        }
+        _log.info(
+            "index_incremental %(path)s: stale=%(n_stale_docs)d "
+            "deleted=%(n_deleted_docs)d fresh=%(n_fresh_chunks)d "
+            "carried=%(n_carried_chunks)d touched=%(touched_sources)s "
+            "wall_s=%(wall_s).3f",
+            {**stats, "path": path, "wall_s": time.perf_counter() - started},
+        )
+        return stats
 
     spark = docs.sparkSession
     target = os.path.join(path, "chunks_incr")
     fps = docs.select(
         F.col(id_col), F.col(source_col), F.md5(F.col(text_col)).alias(INCR_FP_COL)
     )
+    key = [id_col, source_col, INCR_FP_COL]
     # local-path short-circuit: probing a known-absent store through
     # spark.read logs a full analysis stack trace per run (first-write is
     # the COMMON case for this operator's callers); object-store URIs fall
     # through to the exception path
-    if "://" not in target and not os.path.isdir(target):
-        stored_fps = None
-    else:
+    stored = None
+    if "://" in target or os.path.isdir(target):
         try:
-            stored_fps = (
-                spark.read.parquet(target)
-                .select(id_col, source_col, INCR_FP_COL)
-                .distinct()
-            )
+            stored = spark.read.parquet(target)
         except AnalysisException as e:
             if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
                 raise
-            stored_fps = None
 
-    if stored_fps is None:
+    if stored is None:
+        diff = fps.select(id_col, source_col, F.lit(_STALE).alias(_STATE))
         stale_docs = docs
-        deleted = None
-        touched = [r[0] for r in docs.select(source_col).distinct().collect()]
-        n_deleted = 0
     else:
+        stored_fps = stored.select(*key).distinct()
         # diff key is the FULL (id, source, fp) triple: a doc whose source
         # moved but whose text is unchanged is stale too (ADVICE r7 —
         # keying on (id, fp) alone kept the old source forever)
-        stale_ids = fps.join(
-            stored_fps, [id_col, source_col, INCR_FP_COL], "left_anti"
-        ).select(id_col, source_col)
+        stale_ids = fps.join(stored_fps, key, "left_anti").select(id_col, source_col)
         deleted = stored_fps.join(fps.select(id_col), id_col, "left_anti").select(
             id_col, source_col
         )
-        # touched partitions: sources holding a stale or deleted document,
-        # PLUS the stored (old) sources of stale ids — a (doc_id, source)
-        # move must rewrite the old partition or its chunks survive
-        # alongside the re-indexed ones.  Bounded collect by design — the
-        # store is partitioned by a low-cardinality source prefix (module
-        # docstring).
-        stale_old_src = stored_fps.join(
+        # a (doc_id, source) move must rewrite the old partition or its
+        # chunks survive alongside the re-indexed ones
+        moved_from = stored_fps.join(
             stale_ids.select(id_col), id_col, "left_semi"
-        ).select(source_col)
-        touched_df = (
-            stale_ids.select(source_col)
-            .union(deleted.select(source_col))
-            .union(stale_old_src)
-            .distinct()
+        ).select(id_col, source_col)
+        diff = (
+            stale_ids.withColumn(_STATE, F.lit(_STALE))
+            .union(deleted.withColumn(_STATE, F.lit(_DELETED)))
+            .union(moved_from.withColumn(_STATE, F.lit(_MOVED_FROM)))
+            .localCheckpoint(eager=True)
         )
-        touched = [r[0] for r in touched_df.collect()]
-        n_deleted = deleted.count()
-        stale_docs = docs.join(stale_ids.select(id_col), id_col, "left_semi")
-
+        stale_docs = docs.join(
+            diff.filter(F.col(_STATE) == _STALE).select(id_col), id_col, "left_semi"
+        )
+    # touched partitions: sources holding a stale, deleted or moved-from
+    # row.  Bounded collect by design — its rows are sources x states, and
+    # the store is partitioned by a low-cardinality source prefix (module
+    # docstring).
+    counts = diff.groupBy(source_col, _STATE).count().collect()
+    touched = sorted({r[0] for r in counts})
+    n_stale = sum(r[2] for r in counts if r[1] == _STALE)
+    n_deleted = sum(r[2] for r in counts if r[1] == _DELETED)
     if not touched:
-        return {
-            "n_stale_docs": 0,
-            "n_deleted_docs": 0,
-            "n_fresh_chunks": 0,
-            "n_carried_chunks": 0,
-            "touched_sources": [],
-        }
+        return done()
 
     chunked = chunk_documents(
         stale_docs, chunk_size=chunk_size, id_col=id_col,
@@ -470,7 +502,7 @@ def index_incremental(
     # docs scan partitioning (a single-file table reads as 1 partition),
     # which would otherwise run the pipeline's expensive map on one core
     nparts = spark.sparkContext.defaultParallelism
-    fresh = (
+    out = (
         chunked.withColumn(
             # chunk_id = source:doc_id:chunk_index; second-to-last token so
             # a ':' inside source can never corrupt the id
@@ -482,104 +514,57 @@ def index_incremental(
         .withColumn("embedding", embedder.embed_col(F.col("document")))
         .select(
             "chunk_id", "source", "chunk_index", "total_chunks", "document",
-            "embedding", id_col, INCR_FP_COL,
+            "embedding", id_col, INCR_FP_COL, F.lit(True).alias(_FRESH),
         )
-        # lazy checkpoint: the store write below materializes this once;
-        # the post-write written-partitions probe then reuses it instead
-        # of re-running the embed UDF (the bitext lazy-checkpoint
-        # discipline)
-        .localCheckpoint(eager=False)
     )
-    n_stale = stale_docs.count()
-
-    if stored_fps is None:
-        if n_stale == 0:
-            # empty first corpus: nothing to write — an all-empty
-            # partitioned write would leave an unreadable parquet dir
-            return {
-                "n_stale_docs": 0,
-                "n_deleted_docs": 0,
-                "n_fresh_chunks": 0,
-                "n_carried_chunks": 0,
-                "touched_sources": [],
-            }
-        # one shuffle by the partition column before the write: without it
-        # every task writes a sliver into every source dir (32 files per
-        # partition from the embed-spread repartition above) — footer count
-        # dominates the later fingerprint-diff scans and the write itself
-        (
-            fresh.repartition(F.col(source_col))
-            .write.mode("overwrite")
-            .partitionBy(source_col)
-            .parquet(target)
+    if stored is not None:
+        # carry-over: surviving rows of touched partitions only (partition-
+        # pruned scan), materialized to break the same-path read/overwrite
+        # cycle before the dynamic overwrite below replaces those
+        # partitions.  Survival key is the full (id, source, fp) triple — a
+        # moved doc's old row matches on (id, fp) but not source and must
+        # NOT be carried.
+        carry = (
+            stored.filter(F.col(source_col).isin(touched))
+            .join(fps.select(*key), key, "left_semi")
+            .localCheckpoint(eager=True)
         )
-        n_fresh = spark.read.parquet(target).count()
-        return {
-            "n_stale_docs": n_stale,
-            "n_deleted_docs": 0,
-            "n_fresh_chunks": n_fresh,
-            "n_carried_chunks": 0,
-            "touched_sources": sorted(touched),
-        }
-
-    # carry-over: surviving rows of touched partitions only (partition-
-    # pruned scan), materialized to break the same-path read/overwrite
-    # cycle before the dynamic overwrite below replaces those partitions.
-    # Survival key is the full (id, source, fp) triple — a moved doc's old
-    # row matches on (id, fp) but not source and must NOT be carried.
-    current_keys = fps.select(id_col, source_col, INCR_FP_COL)
-    carry = (
-        spark.read.parquet(target)
-        .filter(F.col(source_col).isin(touched))
-        .join(current_keys, [id_col, source_col, INCR_FP_COL], "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    n_carried = carry.count()
-    out = carry.select(*fresh.columns).unionByName(fresh)
+        out = carry.withColumn(_FRESH, F.lit(False)).select(*out.columns).unionByName(out)
+    # one shuffle by the partition column before the write: without it
+    # every task writes a sliver into every source dir (one file per
+    # embed-spread partition) — footer count dominates the later
+    # fingerprint-diff scans and the write itself.  The write counts fresh
+    # and carried rows and the rows of each touched partition (touched is
+    # a bounded list), observed above the exchange as in write_chunks.
+    obs = Observation()
+    out = out.repartition(F.col(source_col)).observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col(_FRESH).cast("long")).alias("fresh"),
+        *(
+            F.sum(F.col(source_col).eqNullSafe(F.lit(s)).cast("long")).alias(f"src{i}")
+            for i, s in enumerate(touched)
+        ),
+    ).drop(_FRESH)
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            out.repartition(F.col(source_col))
-            .write.mode("overwrite")
-            .partitionBy(source_col)
-            .parquet(target)
-        )
+        out.write.mode("overwrite").partitionBy(source_col).parquet(target)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    seen = obs.get
+    n_fresh = seen["fresh"] or 0
     # dynamic overwrite only replaces partitions PRESENT in the written
     # data — a touched partition whose every doc was deleted (nothing
     # carried, nothing fresh) would silently keep its stale rows.  Remove
-    # those partition dirs explicitly (touched is a bounded list).
+    # those partition dirs explicitly.
     import shutil as _shutil
 
-    written = {
-        r[0] for r in out.select(source_col).distinct().collect()
-    }
-    for src_val in set(touched) - written:
+    for i, src_val in enumerate(touched):
         pdir = os.path.join(target, f"{source_col}={src_val}")
-        if os.path.isdir(pdir):
+        if not seen[f"src{i}"] and os.path.isdir(pdir):
             _shutil.rmtree(pdir)
-    if not written and not any(
-        d.startswith(f"{source_col}=") for d in os.listdir(target)
-    ):
-        # every partition deleted: the store is now empty (unreadable as
-        # parquet) — count from what we know instead of a failing read
-        n_fresh = 0
-    else:
-        n_fresh = (
-            spark.read.parquet(target)
-            .filter(F.col(source_col).isin(touched))
-            .count()
-            - n_carried
-        )
-    return {
-        "n_stale_docs": n_stale,
-        "n_deleted_docs": n_deleted,
-        "n_fresh_chunks": n_fresh,
-        "n_carried_chunks": n_carried,
-        "touched_sources": sorted(touched),
-    }
+    return done(n_stale, n_deleted, n_fresh, seen["rows"] - n_fresh, touched)
 
 
 def read_chunks_incremental(spark: SparkSession, path: str) -> DataFrame:

@@ -527,9 +527,8 @@ def test_no_unreviewed_collect_sites_in_engine_source():
         ("operators/search.py", '(r[0], r[1]) for r in centroids.select("list_id", "centroid").collect()'),
         ("operators/search.py", "seeds = v.filter(F.col(vec_id) % every == 0).collect()"),
         ("sources/store.py", "rows = spark.read.json(os.path.join(path, \"manifest\")).collect()"),
-        ("sources/store.py", "touched = [r[0] for r in docs.select(source_col).distinct().collect()]"),
-        ("sources/store.py", "touched = [r[0] for r in touched_df.collect()]"),
-        ("sources/store.py", "r[0] for r in out.select(source_col).distinct().collect()"),
+        # index_incremental's fingerprint diff: rows are sources x states
+        ("sources/store.py", "counts = diff.groupBy(source_col, _STATE).count().collect()"),
     }
     found = set()
     for root, _dirs, files in os.walk(pkg):

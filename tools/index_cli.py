@@ -27,10 +27,14 @@ Usage: python tools/index_cli.py REPO_DIR [--store-path DIR] [--chunk-size N]
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_log = logging.getLogger(__name__)
 
 
 def build_index(
@@ -45,19 +49,32 @@ def build_index(
 ) -> dict:
     """Scan -> chunk -> embed -> write; returns counters for the caller.
 
+    On overwrite the counters come out of the write's own pass
+    (``DataFrame.observe``): the errored-file count is observed on the
+    corpus before the error filter and the chunk count by
+    ``write_chunks``, so no action re-runs the scan plan afterwards.  The
+    ``append`` path keeps its two counts: the anti-joined rows, because an
+    empty upsert must skip its write, and the errored files.  Each call
+    logs the counters and its wall seconds at INFO on this module's
+    logger.
+
     Kept separate from main() so tests (and notebooks) can drive the exact
     CLI pipeline in-process.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
     from log_vector_spark.operators.chunk import chunk_documents
     from log_vector_spark.operators.embed import get_embedder
     from log_vector_spark.sources.corpus import read_corpus_text
     from log_vector_spark.sources.store import upsert_chunks, write_chunks, write_manifest
 
+    started = time.perf_counter()
+    errored = Observation()
     corpus = read_corpus_text(spark, repo_dir)
-    ok = corpus.filter(~F.col("error")).select(
-        F.col("path").alias("doc_id"), F.col("source"), F.col("text")
+    ok = (
+        corpus.observe(errored, F.sum(F.col("error").cast("long")).alias("n"))
+        .filter(~F.col("error"))
+        .select(F.col("path").alias("doc_id"), F.col("source"), F.col("text"))
     )
     chunks = chunk_documents(ok, chunk_size=chunk_size)
     if embedder_kind == "local":
@@ -70,9 +87,12 @@ def build_index(
     embedded = chunks.withColumn("embedding", embedder.embed_col(F.col("document")))
     if append:
         n_written = upsert_chunks(embedded, store_path)
+        # on a batch with no chunks AQE may drop the anti-join side that
+        # carries the observed scan, so errored files get their own count
+        n_err = corpus.filter(F.col("error")).count()
     else:
-        write_chunks(embedded, store_path, mode="overwrite")
-        n_written = embedded.count()
+        n_written = write_chunks(embedded, store_path, mode="overwrite")
+        n_err = errored.get["n"] or 0
     write_manifest(
         spark,
         store_path,
@@ -81,8 +101,14 @@ def build_index(
         embedding_model=model or embedder_kind,
         chunk_size=chunk_size,
     )
-    n_err = corpus.filter(F.col("error")).count()
-    return {"chunks_written": n_written, "files_errored": n_err}
+    stats = {"chunks_written": n_written, "files_errored": n_err}
+    _log.info(
+        "build_index %(repository)s -> %(store_path)s: chunks_written=%(chunks_written)d "
+        "files_errored=%(files_errored)d wall_s=%(wall_s).3f",
+        {**stats, "repository": repo_dir, "store_path": store_path,
+         "wall_s": time.perf_counter() - started},
+    )
+    return stats
 
 
 def main(argv: list[str] | None = None) -> int:
